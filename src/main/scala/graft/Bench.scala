@@ -269,11 +269,13 @@ object Bench {
     // shared-build tags) at a stable REPO path — the round driver commits
     // leftover files, so each round's driver bench run lands in history and
     // tools/bench_diff.py can flag any query >1.5× its prior-round minimum.
-    // Only full-suite default-SF runs overwrite it: a SPARK_GRAFT_ONLY
-    // profiling subset or an sf1 sweep must not clobber the gate artifact.
+    // Only full-suite default-SF runs at the pinned 32 cores overwrite it:
+    // a SPARK_GRAFT_ONLY profiling subset, an sf1 sweep or the 8-core
+    // scaling run must not clobber the gate artifact.
     // exact basename match: a substring test would also match sf0.15 or a
     // path whose ancestors contain "sf0.1" and clobber the gate artifact
-    if (only.isEmpty && new java.io.File(sfDir).getName == "sf0.1") {
+    if (only.isEmpty && new java.io.File(sfDir).getName == "sf0.1" &&
+        cpus == "32") {
       val repoOut = sys.env.getOrElse(
         "SPARK_GRAFT_PERQUERY_OUT",
         new java.io.File("bench_perquery_latest.json").getAbsolutePath)

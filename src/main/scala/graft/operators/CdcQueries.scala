@@ -788,23 +788,26 @@ object CdcQueries extends QueryGroup {
     // segment moves, which relocate every joined order's revenue), then
     // deletes on both sides (including same-batch order+customer
     // coincidences, where the cross term prevents double-removal). The
-    // oracle recomputes the view from scratch over the base tables —
-    // IVM's claim is exactly that equality.
+    // state is [[graft.streaming.BucketedJoinView]]'s store with ONE
+    // bucket (every batch rewrites the whole state). The oracle
+    // recomputes the view from scratch over the base tables — IVM's
+    // claim is exactly that equality.
     "cdc_ivm_join_view" -> ((s, dir) =>
       ivmViews(s, dir).filter(col("_mode") === "join")
         .select(col("key").as("seg"),
           col("m1").as("revenue_cents"), col("m2").as("n_orders"))
         .orderBy("seg")),
 
-    // the SAME join view maintained through the HASH-BUCKETED state
-    // layout ([[graft.streaming.BucketedJoinView]]) — the 100 TB storage
+    // the SAME join view in the same store with 8 hash buckets
+    // ([[graft.streaming.BucketedJoinView]]) — the 100 TB storage
     // path: a batch rewrites only the buckets its delta keys hash into
     // (per-bucket `_applied` markers gate the non-idempotent additive
     // merge on replay), and because A and B bucket on the same key hash,
     // the bilinear-term probes read only touched buckets too. Same three
     // op-sliced batches and shared event projections as
     // cdc_ivm_join_view; oracle = the identical from-scratch recompute,
-    // so the gate checks the layout changed NOTHING about the algebra.
+    // so the gate checks the bucket count changed NOTHING about the
+    // algebra.
     "cdc_ivm_join_bucketed" -> ((s, dir) =>
       ivmViews(s, dir).filter(col("_mode") === "bkt")
         .select(col("key").as("seg"),
@@ -1297,16 +1300,16 @@ object CdcQueries extends QueryGroup {
     * (MIN/MAX under deletes — the non-distributive case where the
     * aggregate must re-emerge from surviving support); `join` =
     * [[graft.streaming.IncrementalJoinView]] bilinear delta propagation
-    * Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB from BOTH changelogs; `bkt` = the
-    * same join view through [[graft.streaming.BucketedJoinView]]'s
-    * hash-bucketed state layout (a batch rewrites only touched buckets,
-    * `_applied` markers gate replay — the 100 TB storage path). Every
+    * Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB from BOTH changelogs into the
+    * [[graft.streaming.BucketedJoinView]] store with one bucket; `bkt` =
+    * the same store with 8 buckets (a batch rewrites only touched
+    * buckets, `_applied` markers gate replay). Every
     * oracle is the from-scratch recompute over the base tables: IVM's
     * whole claim is that equality, and the hash gate checks it.
     *
     * Snapshot dirs are per-(corpus, process) and wiped up front (a fresh
     * createTempDirectory per invocation would leak parquet every rep;
-    * the wipe keeps applyBatch's stale-batchId guard happy). The shared
+    * the wipe keeps the stores' stale-batchId guards happy). The shared
     * delta projections (events / fact / dim) are resolved on THIS thread
     * before the futures spawn so each is built exactly once up front
     * (the per-tag-latch cache tolerates concurrent first-touches, but
@@ -1369,28 +1372,19 @@ object CdcQueries extends QueryGroup {
           norm("minmax", IncrementalMinMax.readView(s, tmp).get,
             "o_orderstatus", Seq("min_cents", "max_cents", "n_orders"))
         }
-        val fJoin = Future {
-          val tmp = wiped("graft-ivm-join")
-          IncrementalJoinView.applyBatchEvents(
-            ops(fe, Seq("c", "r")), ops(de, Seq("c")), 0L, tmp)
-          IncrementalJoinView.applyBatchEvents(
-            ops(fe, Seq("u")), ops(de, Seq("u")), 1L, tmp)
-          IncrementalJoinView.applyBatchEvents(
-            ops(fe, Seq("d")), ops(de, Seq("d")), 2L, tmp)
-          norm("join", IncrementalJoinView.readView(s, tmp).get,
+        def joinView(mode: String, name: String, nBuckets: Int) = Future {
+          val tmp = wiped(name)
+          BucketedJoinView.applyBatchEvents(
+            ops(fe, Seq("c", "r")), ops(de, Seq("c")), 0L, tmp, nBuckets)
+          BucketedJoinView.applyBatchEvents(
+            ops(fe, Seq("u")), ops(de, Seq("u")), 1L, tmp, nBuckets)
+          BucketedJoinView.applyBatchEvents(
+            ops(fe, Seq("d")), ops(de, Seq("d")), 2L, tmp, nBuckets)
+          norm(mode, BucketedJoinView.readView(s, tmp).get,
             "seg", Seq("revenue_cents", "n_orders"))
         }
-        val fBkt = Future {
-          val tmp = wiped("graft-ivm-join-bkt")
-          BucketedJoinView.applyBatchEvents(
-            ops(fe, Seq("c", "r")), ops(de, Seq("c")), 0L, tmp, 8)
-          BucketedJoinView.applyBatchEvents(
-            ops(fe, Seq("u")), ops(de, Seq("u")), 1L, tmp, 8)
-          BucketedJoinView.applyBatchEvents(
-            ops(fe, Seq("d")), ops(de, Seq("d")), 2L, tmp, 8)
-          norm("bkt", BucketedJoinView.readView(s, tmp).get,
-            "seg", Seq("revenue_cents", "n_orders"))
-        }
+        val fJoin = joinView("join", "graft-ivm-join", 1)
+        val fBkt = joinView("bkt", "graft-ivm-join-bkt", 8)
         val results = Seq(fView, fMinMax, fJoin, fBkt).map { f =>
           try Right(Await.result(f, Duration.Inf))
           catch { case e: Throwable => Left(e) }

@@ -4,18 +4,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import IncrementalJoinView.{merge, term}
 
-/** [[IncrementalJoinView]] with HASH-BUCKETED key state — the storage
-  * layout its Scaladoc names as the 100 TB swap-out: instead of
-  * rewriting the whole key-cardinality A/B snapshot every micro-batch,
-  * state lives in `pmod(xxhash64(custkey), nBuckets)` hive partitions
+/** The one state store of the two-table join view: the
+  * [[IncrementalJoinView]] delta algebra over HASH-BUCKETED key state.
+  * A and B live in `pmod(xxhash64(custkey), nBuckets)` hive partitions
   * (the [[Sinks.upsertByKey]] layout) and a batch rewrites ONLY the
-  * buckets its delta keys hash into.
+  * buckets its delta keys hash into; `nBuckets = 1` is the
+  * whole-state-rewrite case, and `nBuckets` is the only geometry setting.
   *
-  * The same bilinear merge algebra (Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB over
-  * signed integer measures) — only the state layout changes. Because A
-  * and B are bucketed BY THE SAME key hash, every per-batch read is
-  * bucket-pruned too, not just the writes:
+  * The merge algebra is Δ(A⋈B) = ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB over signed
+  * integer measures. Because A and B are bucketed BY THE SAME key hash,
+  * every per-batch read is bucket-pruned too, not just the writes:
   *   - ΔA ⋈ B probes only B's buckets for ΔA's keys (same hash);
   *   - A ⋈ ΔB probes only A's buckets for ΔB's keys;
   *   - each state merge reads only its own touched buckets.
@@ -46,13 +46,14 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object BucketedJoinView {
 
   /** Apply one micro-batch of pre-deduped fact/dim event projections
-    * ([[IncrementalJoinView.factEvents]]/[[IncrementalJoinView.dimEvents]]
-    * — same op-sliced sharing contract as the snapshot form). */
+    * ([[IncrementalJoinView.factEvents]]/[[IncrementalJoinView.dimEvents]];
+    * each batch must already be deduped — the op-sliced sharing
+    * contract). */
   def applyBatchEvents(factEv: DataFrame, dimEv: DataFrame,
       batchId: Long, path: String, nBuckets: Int = 64): Unit = {
     val spark = factEv.sparkSession
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    pinGeometry(fs, path, nBuckets)
+    BucketCommit.pinGeometry(fs, path, nBuckets)
     BucketCommit.recover(fs, s"$path/A")
     BucketCommit.recover(fs, s"$path/B")
     val wIds = committedW(fs, path)
@@ -119,8 +120,7 @@ object BucketedJoinView {
       if (!wCommitted) {
         // W from the PRE-batch states (all markers < batchId here — a
         // crash can only have happened before any bucket advanced,
-        // because W commits first). term/merge are IncrementalJoinView's
-        // own — the algebra is shared, only the state layout differs.
+        // because W commits first).
         val dW = term(dA, bPrev.select(col("k"), col("seg"),
             col("m").as("d_m")))
           .unionByName(term(aPrev.select(col("k"), col("cents").as("d_cents"),
@@ -194,28 +194,15 @@ object BucketedJoinView {
     Some((toApply, stage))
   }
 
-  // -- helpers ---------------------------------------------------------
-
-  // the bilinear term and the additive merge are IncrementalJoinView's
-  // (private[streaming]) — one definition of the algebra for both layouts
-  private def term(a: DataFrame, b: DataFrame) = IncrementalJoinView.term(a, b)
-  private def merge(prev: Option[DataFrame], delta: DataFrame,
-      keys: Seq[String], cols: Seq[(String, String)]): DataFrame =
-    IncrementalJoinView.merge(prev, delta, keys, cols)
-
-  // geometry pinning is the shared BucketCommit.pinGeometry — one
-  // definition for every hash-bucketed store (this one and the upsert sink)
-  private def pinGeometry(fs: FileSystem, path: String, nBuckets: Int): Unit =
-    BucketCommit.pinGeometry(fs, path, nBuckets)
-
-  /** OFFLINE geometry migration — the real form of [[pinGeometry]]'s
-    * "rebuild under the new geometry": rebuild the quiescent store at
-    * `src` under `newNBuckets` buckets at `dst`. `nBuckets` sizes
-    * per-batch I/O, and as state grows the original choice goes stale
-    * exactly like an under-sharded search index or an under-partitioned
-    * topic (the reference resizes both the same way —
-    * values-prod.yaml:22-28, prod-resources.yaml:94); the cure is the
-    * same too: reshard offline, then point the consumer at the new path.
+  /** OFFLINE geometry migration — the real form of
+    * [[BucketCommit.pinGeometry]]'s "rebuild under the new geometry":
+    * rebuild the quiescent store at `src` under `newNBuckets` buckets at
+    * `dst`. `nBuckets` sizes per-batch I/O, and as state grows the
+    * original choice goes stale exactly like an under-sharded search
+    * index or an under-partitioned topic (the reference resizes both the
+    * same way — values-prod.yaml:22-28, prod-resources.yaml:94); the cure
+    * is the same too: reshard offline, then point the consumer at the new
+    * path.
     *
     * Safety gates — a reshard must not launder a half-applied batch into
     * "committed":
@@ -358,13 +345,14 @@ object BucketedJoinView {
       if (ms.isEmpty) -1L else ms.map(_.stripPrefix("_applied-").toLong).max
     }
 
-  /** Versioned-maintenance as a streaming sink over the RAW multi-topic
-    * stream — the [[IncrementalJoinView.maintain]] contract (one Kafka
-    * subscription carries both tables' envelopes; each micro-batch splits
-    * by topic, parses under its table's schema, and delta-applies), with
-    * the dirty-bucket store underneath. The foreachBatch batchId sequence
-    * plus the per-bucket `_applied` markers make crash replays
-    * exactly-once (see [[applyBatchEvents]]). */
+  /** Maintenance as a streaming sink over the RAW multi-topic stream
+    * (the production shape: one Kafka subscription carries both tables'
+    * envelopes; each micro-batch splits by topic, parses under its
+    * table's schema, and delta-applies). The foreachBatch batchId
+    * sequence plus the per-bucket `_applied` markers make crash replays
+    * exactly-once (see [[applyBatchEvents]]); a lost checkpoint restarts
+    * ids at 0, which [[applyBatchEvents]] rejects against a non-empty
+    * store. */
   def maintain(rawStream: DataFrame, path: String,
       checkpoint: Option[String] = None, nBuckets: Int = 64)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, StringType}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Incremental maintenance of a TWO-TABLE equi-join view — the
-  * reference's declared "enriched data" path (reference README.md:77:
-  * CDC events joined to a dimension before aggregation): keep
+/** The delta algebra of incremental maintenance for a TWO-TABLE
+  * equi-join view — the reference's declared "enriched data" path
+  * (reference README.md:77: CDC events joined to a dimension before
+  * aggregation): keep
   *
   *   W = SELECT seg, SUM(order cents), COUNT(orders)
   *       FROM orders JOIN customers USING (custkey) GROUP BY seg
@@ -28,27 +28,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * back once by ΔA ⋈ ΔB — signed multiplicities cancel to exactly one
   * removal.
   *
-  * State per commit — ONE versioned `batch=<id>` snapshot holding all
-  * three tables as a part-partitioned parquet write under a single
-  * `_SUCCESS` marker, so A, B and W commit atomically together (same
-  * replay/overwrite discipline as [[IncrementalView]]):
-  *   - `A`: custkey → (signed cents sum, signed row count) — key-
-  *     cardinality partial aggregate of the fact side;
-  *   - `B`: (custkey, seg) → signed multiplicity — the dimension as a
-  *     signed multiset (m is 1 for a live row; an update is −old +new);
-  *   - `W`: seg → (revenue_cents, n_orders) — the group-cardinality
-  *     view itself.
-  * A batch reads state ∝ |keys| and shuffles only delta-sized and
-  * key-cardinality frames on custkey; nothing is ever row²-sized. At
-  * 100 TB the A/B snapshot REWRITE per batch is the piece to swap out:
-  * compose with [[Sinks.upsertByKey]]'s hash-bucket layout so a batch
-  * rewrites only its dirty buckets — the merge algebra is unchanged,
-  * only the storage layout of A and B.
-  *
-  * Measures are exact integers (price cents as long, signed counts), so
-  * merge order can never perturb the result: the maintained view is
-  * bit-identical to the from-scratch recompute, which is what IvmSpec
-  * and the `cdc_ivm_join_view` oracle assert.
+  * The state (A, B, W) and its exactly-once commit live in
+  * [[BucketedJoinView]], the one store; `nBuckets = 1` is the
+  * whole-state-rewrite case. Measures are exact integers (price cents as
+  * long, signed counts), so merge order can never perturb the result: the
+  * maintained view is bit-identical to the from-scratch recompute, which
+  * is what IvmSpec and the `cdc_ivm_join_*` oracles assert.
   */
 object IncrementalJoinView {
 
@@ -62,29 +47,29 @@ object IncrementalJoinView {
     * projection + dedup ONCE and slices it per batch; `op` is in the
     * dedup key, so global dedup equals per-slice dedup. */
   def factEvents(parsed: DataFrame): DataFrame =
-    dedup(parsed, before = Seq(
-      col("env.before.o_custkey").as("b_k"), cents(col("env.before")).as("b_c")),
-      after = Seq(
-        col("env.after.o_custkey").as("a_k"), cents(col("env.after")).as("a_c")))
+    dedup(parsed,
+      coalesce(col("env.after.o_orderkey"), col("env.before.o_orderkey")),
+      before = Seq(col("env.before.o_custkey").as("b_k"),
+        cents(col("env.before")).as("b_c")),
+      after = Seq(col("env.after.o_custkey").as("a_k"),
+        cents(col("env.after")).as("a_c")))
 
   /** The deduped dimension-side event projection (same sharing contract
     * as [[factEvents]]). */
   def dimEvents(parsed: DataFrame): DataFrame =
-    dedup(parsed, before = Seq(
-      col("env.before.c_custkey").as("b_k"),
-      col("env.before.c_mktsegment").as("b_s")),
+    dedup(parsed,
+      coalesce(col("env.after.c_custkey"), col("env.before.c_custkey")),
+      before = Seq(
+        col("env.before.c_custkey").as("b_k"),
+        col("env.before.c_mktsegment").as("b_s")),
       after = Seq(
         col("env.after.c_custkey").as("a_k"),
         col("env.after.c_mktsegment").as("a_s")))
 
-  /** Signed per-custkey fact deltas `(k, d_cents, d_rows)` of one parsed
-    * orders micro-batch (replay-deduped like [[IncrementalView.eventsOf]];
-    * a status-only update nets to zero here and is dropped — the join
-    * view keys on custkey, so it genuinely contributes nothing). */
-  def factDelta(parsed: DataFrame): DataFrame =
-    factDeltaOfEvents(factEvents(parsed))
-
-  /** [[factDelta]] over a pre-deduped [[factEvents]] projection. */
+  /** Signed per-custkey fact deltas `(k, d_cents, d_rows)` of a
+    * [[factEvents]] projection (a status-only update nets to zero here
+    * and is dropped — the join view keys on custkey, so it genuinely
+    * contributes nothing). */
   def factDeltaOfEvents(ev: DataFrame): DataFrame = {
     val minus = ev.filter(col("op").isin("u", "d") && col("b_k").isNotNull)
       .select(col("b_k").as("k"), (-col("b_c")).as("d_cents"),
@@ -97,13 +82,9 @@ object IncrementalJoinView {
       .filter(col("d_cents") =!= 0L || col("d_rows") =!= 0L)
   }
 
-  /** Signed dimension deltas `(k, seg, d_m)` of one parsed customer
-    * micro-batch: an update contributes −(old seg) +(new seg), moving
+  /** Signed dimension deltas `(k, seg, d_m)` of a [[dimEvents]]
+    * projection: an update contributes −(old seg) +(new seg), moving
     * every joined fact row's measures across groups. */
-  def dimDelta(parsed: DataFrame): DataFrame =
-    dimDeltaOfEvents(dimEvents(parsed))
-
-  /** [[dimDelta]] over a pre-deduped [[dimEvents]] projection. */
   def dimDeltaOfEvents(ev: DataFrame): DataFrame = {
     val minus = ev.filter(col("op").isin("u", "d") && col("b_k").isNotNull)
       .select(col("b_k").as("k"), col("b_s").as("seg"), lit(-1L).as("d_m"))
@@ -114,108 +95,32 @@ object IncrementalJoinView {
   }
 
   /** Narrow projection + batch-local at-least-once dedup, shared by both
-    * delta builders — the same (key, position, op) identity
-    * [[IncrementalView.eventsOf]] documents. */
-  private def dedup(parsed: DataFrame,
+    * event projections — the same (row key, position, op) identity
+    * [[IncrementalView.eventsOf]] documents. The row key is the source
+    * table's primary key, not the join key: the rows of a Debezium
+    * snapshot (`op=r`) share one source position, so keying on the join
+    * key would keep one order per customer. */
+  private def dedup(parsed: DataFrame, rowKey: org.apache.spark.sql.Column,
       before: Seq[org.apache.spark.sql.Column],
       after: Seq[org.apache.spark.sql.Column]): DataFrame =
     parsed
       .filter(!col("_corrupt") && !col("_tombstone"))
-      .select(col("env.op").as("op") +: (before ++ after) :+
+      .select(col("env.op").as("op") +: rowKey.as("_row") +: (before ++ after) :+
         col("env.source.lsn").as("lsn") :+ col("env.source.file").as("file") :+
         col("env.source.pos").as("pos") :+ col("env.source.ts_ms").as("ts"): _*)
-      .dropDuplicates("op", "lsn", "file", "pos", "ts", "b_k", "a_k")
-
-  /** Apply one micro-batch of both changelogs: previous committed
-    * (A, B, W) ⊎ deltas → snapshot `batch=<batchId>`. Replay-safe: a
-    * re-run of an already-committed batchId recomputes the identical
-    * snapshot from the same predecessor (deterministic overwrite, never
-    * a double-apply). */
-  def applyBatch(parsedOrders: DataFrame, parsedCustomers: DataFrame,
-      batchId: Long, path: String): Unit =
-    applyBatchEvents(factEvents(parsedOrders), dimEvents(parsedCustomers),
-      batchId, path)
-
-  /** [[applyBatch]] over pre-deduped [[factEvents]]/[[dimEvents]]
-    * projections — each batch must already be deduped (the op-sliced
-    * sharing contract). */
-  def applyBatchEvents(factEv: DataFrame, dimEv: DataFrame,
-      batchId: Long, path: String): Unit = {
-    val spark = factEv.sparkSession
-    val snaps = committed(spark, path)
-    require(snaps.isEmpty || batchId >= snaps.last._1,
-      s"batchId $batchId is behind committed snapshot ${snaps.last._1} " +
-        s"at $path — resume with the original checkpoint or a new path")
-    val prev = snaps.filter(_._1 < batchId).lastOption
-    val aPrev = prev.map(p => read(spark, p._2, "A", aSchema))
-    val bPrev = prev.map(p => read(spark, p._2, "B", bSchema))
-    val wPrev = prev.map(p => read(spark, p._2, "W", wSchema))
-    // each delta feeds THREE consumers inside the one commit action (two
-    // bilinear terms + its state merge); persist so the dedup + groupBy
-    // pipeline behind it runs once per batch, not once per consumer
-    val dA = factDeltaOfEvents(factEv).persist()
-    val dB = dimDeltaOfEvents(dimEv).persist()
-    try {
-
-    // the three bilinear terms, each a signed (seg, cents, rows) stream;
-    // deltas are batch-sized — Spark broadcasts them against the
-    // key-cardinality state sides on its own (AQE size estimate), and at
-    // scale the custkey equi-joins co-partition on the same key
-    val aAsDelta = aPrev.map(_.select(col("k"),
-      col("cents").as("d_cents"), col("rows").as("d_rows")))
-    val bAsDelta = bPrev.map(_.select(col("k"), col("seg"),
-      col("m").as("d_m")))
-    val terms = Seq(
-      bAsDelta.map(b => term(dA, b)),            // ΔA ⋈ B
-      aAsDelta.map(a => term(a, dB)),            // A ⋈ ΔB
-      Some(term(dA, dB))                         // ΔA ⋈ ΔB
-    ).flatten
-    val dW = terms.reduce(_ unionByName _)
-      .groupBy("seg")
-      .agg(sum("c").as("d_cents"), sum("r").as("d_rows"))
-
-    val aNew = merge(aPrev, dA.select(col("k"), col("d_cents"), col("d_rows")),
-      Seq("k"), Seq("cents" -> "d_cents", "rows" -> "d_rows"))
-      .filter(col("cents") =!= 0L || col("rows") =!= 0L)
-    val bNew = merge(bPrev, dB.select(col("k"), col("seg"), col("d_m")),
-      Seq("k", "seg"), Seq("m" -> "d_m"))
-      .filter(col("m") =!= 0L)
-    val wNew = merge(wPrev, dW,
-      Seq("seg"), Seq("revenue_cents" -> "d_cents", "n_orders" -> "d_rows"))
-      .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
-
-    // ONE partitioned write commits A, B and W together under a single
-    // `_SUCCESS` — the three states are one atomic version (a 3-marker
-    // protocol would admit a torn snapshot with A committed and W not),
-    // and one job replaces three (the write itself is shuffle-free:
-    // partitionBy fans rows into part=A/B/W subdirs per task). Schemas
-    // are harmonized into (part, k, seg, v1, v2); `read` projects back.
-    val dir = s"$path/batch=$batchId"
-    val nulS = lit(null).cast(StringType)
-    val nulL = lit(null).cast(LongType)
-    aNew.select(lit("A").as("part"), col("k"), nulS.as("seg"),
-        col("cents").as("v1"), col("rows").as("v2"))
-      .unionByName(bNew.select(lit("B").as("part"), col("k"), col("seg"),
-        col("m").as("v1"), nulL.as("v2")))
-      .unionByName(wNew.select(lit("W").as("part"), nulL.as("k"),
-        col("seg"), col("revenue_cents").as("v1"), col("n_orders").as("v2")))
-      .write.mode(SaveMode.Overwrite).partitionBy("part").parquet(dir)
-    prune(spark, path, keep = 2)
-    } finally { dA.unpersist(false); dB.unpersist(false) }
-  }
+      .dropDuplicates("_row", "op", "lsn", "file", "pos", "ts")
+      .drop("_row")
 
   /** One bilinear term: a signed fact stream (k, d_cents, d_rows) joined
     * to a signed dimension stream (k, seg, d_m) → signed (seg, c, r)
-    * contributions. Shared with [[BucketedJoinView]] — the algebra is
-    * identical across state layouts, only the storage differs. */
+    * contributions. */
   private[streaming] def term(aSide: DataFrame, bSide: DataFrame): DataFrame =
     aSide.join(bSide, "k").select(col("seg"),
       (col("d_cents") * col("d_m")).as("c"),
       (col("d_rows") * col("d_m")).as("r"))
 
   /** Additive outer merge `prev ⊎ delta` on `keys`; `cols` maps each
-    * output measure to its delta column (shared with
-    * [[BucketedJoinView]]). */
+    * output measure to its delta column. */
   private[streaming] def merge(prev: Option[DataFrame], delta: DataFrame,
       keys: Seq[String], cols: Seq[(String, String)]): DataFrame =
     prev match {
@@ -229,52 +134,15 @@ object IncrementalJoinView {
           }: _*)
     }
 
-  // projection back out of the harmonized (part, k, seg, v1, v2) layout
-  private val aSchema = Seq("k" -> "k", "v1" -> "cents", "v2" -> "rows")
-  private val bSchema = Seq("k" -> "k", "seg" -> "seg", "v1" -> "m")
-  private val wSchema = Seq("seg" -> "seg", "v1" -> "revenue_cents",
-    "v2" -> "n_orders")
-
-  // explicit store schema: a legitimately EMPTY snapshot (every key
-  // deleted) has no parquet footer to infer from, and must still read
-  // back as an empty state rather than fail analysis
-  private val storeSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("k", LongType),
-    org.apache.spark.sql.types.StructField("seg", StringType),
-    org.apache.spark.sql.types.StructField("v1", LongType),
-    org.apache.spark.sql.types.StructField("v2", LongType),
-    org.apache.spark.sql.types.StructField("part", StringType)))
-
-  private def read(spark: SparkSession, p: Path, part: String,
-      schema: Seq[(String, String)]): DataFrame =
-    spark.read.schema(storeSchema).parquet(p.toString)
-      // partition filter → only the part=<X> subdir is ever listed/read
-      .filter(col("part") === part)
-      .select(schema.map { case (f, n) => col(f).as(n) }: _*)
-
-  /** Versioned-snapshot maintenance as a streaming sink over the RAW
-    * multi-topic stream (the production shape: one Kafka subscription
-    * carries both tables' envelopes; each micro-batch is split by topic
-    * and parsed under its table's registered schema before the delta
-    * apply). Same exactly-once/checkpoint contract as
-    * [[IncrementalView.maintain]]: the batchId sequence is the
-    * watermark, and a lost checkpoint restarts ids at 0, which
-    * [[applyBatch]] rejects against a non-empty view. */
+  /** [[BucketedJoinView.maintain]] with one bucket. */
   def maintain(rawStream: DataFrame, path: String,
       checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val w = rawStream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (o, c) = splitAndParse(batch)
-        applyBatch(o, c, batchId, path)
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c))
-  }
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    BucketedJoinView.maintain(rawStream, path, checkpoint, nBuckets = 1)
 
   /** Split one multi-topic micro-batch into its parsed orders/customers
-    * halves — the production feed shape both stores' maintain() sinks
-    * share (one Kafka subscription carries both tables' envelopes). */
+    * halves — the production feed shape (one Kafka subscription carries
+    * both tables' envelopes). */
   private[streaming] def splitAndParse(batch: DataFrame)
       : (DataFrame, DataFrame) = (
     graft.sources.Debezium.parseEnvelope(
@@ -284,36 +152,7 @@ object IncrementalJoinView {
       batch.filter(col("topic").endsWith(".customers")),
       graft.sources.Debezium.customerRowSchema))
 
-  /** The current view (highest fully-committed snapshot), if any. */
+  /** [[BucketedJoinView.readView]]. */
   def readView(spark: SparkSession, path: String): Option[DataFrame] =
-    committed(spark, path).lastOption.map(p => read(spark, p._2, "W", wSchema))
-
-  /** The current A/B states — exposed for the spec's invariant check
-    * (W must equal the aggregate of A ⋈ B at every commit). */
-  def readStates(spark: SparkSession, path: String)
-      : Option[(DataFrame, DataFrame)] =
-    committed(spark, path).lastOption.map(p =>
-      (read(spark, p._2, "A", aSchema), read(spark, p._2, "B", bSchema)))
-
-  /** Committed snapshot ids, ascending — the single `_SUCCESS` of the
-    * unified partitioned write covers A, B and W atomically. */
-  private def committed(spark: SparkSession, path: String): Seq[(Long, Path)] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-        .map(s => (s.getPath.getName.stripPrefix("batch=").toLong, s.getPath))
-        .sortBy(_._1)
-  }
-
-  private def prune(spark: SparkSession, path: String, keep: Int): Unit = {
-    val all = committed(spark, path)
-    if (all.size > keep) {
-      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-      all.dropRight(keep).foreach { case (_, p) => fs.delete(p, true) }
-    }
-  }
+    BucketedJoinView.readView(spark, path)
 }

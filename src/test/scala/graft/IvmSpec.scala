@@ -202,29 +202,52 @@ class IvmSpec extends SparkSpec {
     }
   }
 
-  // ---- join-view IVM (IncrementalJoinView) ----
+  // ---- join-view IVM (IncrementalJoinView algebra, BucketedJoinView store) ----
+  // The "join view:" specs run the store with ONE bucket (every batch
+  // rewrites the whole state); the "bucketed join view:" specs use more.
 
   private def parsedDim: DataFrame = CdcOps.parsedCustomerDim(spark, sfDir)
 
-  private def applyJoinPhases(path: String): Unit = {
-    import graft.streaming.IncrementalJoinView
+  /** One batch of both parsed changelogs into the 1-bucket store. */
+  private def applyJoin(parsedOrders: DataFrame, parsedCustomers: DataFrame,
+      batchId: Long, path: String): Unit = {
+    import graft.streaming.{BucketedJoinView, IncrementalJoinView}
+    BucketedJoinView.applyBatchEvents(
+      IncrementalJoinView.factEvents(parsedOrders),
+      IncrementalJoinView.dimEvents(parsedCustomers), batchId, path, 1)
+  }
+
+  private def applyJoinPhases(path: String, nBuckets: Int = 1): Unit = {
+    import graft.streaming.{BucketedJoinView, IncrementalJoinView}
     def ops(df: DataFrame, o: Seq[String]) =
-      df.filter(col("env.op").isin(o: _*))
-    IncrementalJoinView.applyBatch(
-      ops(parsed, Seq("c", "r")), ops(parsedDim, Seq("c")), 0L, path)
-    IncrementalJoinView.applyBatch(
-      ops(parsed, Seq("u")), ops(parsedDim, Seq("u")), 1L, path)
-    IncrementalJoinView.applyBatch(
-      ops(parsed, Seq("d")), ops(parsedDim, Seq("d")), 2L, path)
+      df.filter(col("op").isin(o: _*))
+    val fe = IncrementalJoinView.factEvents(parsed)
+    val de = IncrementalJoinView.dimEvents(parsedDim)
+    BucketedJoinView.applyBatchEvents(
+      ops(fe, Seq("c", "r")), ops(de, Seq("c")), 0L, path, nBuckets)
+    BucketedJoinView.applyBatchEvents(
+      ops(fe, Seq("u")), ops(de, Seq("u")), 1L, path, nBuckets)
+    BucketedJoinView.applyBatchEvents(
+      ops(fe, Seq("d")), ops(de, Seq("d")), 2L, path, nBuckets)
   }
 
   private def joinView(path: String): Seq[(String, Long, Long)] =
-    graft.streaming.IncrementalJoinView.readView(spark, path).get
+    graft.streaming.BucketedJoinView.readView(spark, path).get
       .orderBy("seg").collect().toSeq
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
 
+  /** Agg(A ⋈ B) over the committed states — what W must equal. */
+  private def aggOfStates(path: String): Seq[(String, Long, Long)] = {
+    val (a, b) = graft.streaming.BucketedJoinView.readStates(spark, path)
+    a.join(b, "k").groupBy("seg")
+      .agg(sum(col("cents") * col("m")).as("revenue_cents"),
+        sum(col("rows") * col("m")).as("n_orders"))
+      .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
+      .orderBy("seg").collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+  }
+
   test("join view: W equals the aggregate of the committed A ⋈ B states at every commit") {
-    import graft.streaming.IncrementalJoinView
     val path = tmpDir()
     def ops(df: DataFrame, o: Seq[String]) =
       df.filter(col("env.op").isin(o: _*))
@@ -233,19 +256,12 @@ class IvmSpec extends SparkSpec {
       (ops(parsed, Seq("u")), ops(parsedDim, Seq("u"))),
       (ops(parsed, Seq("d")), ops(parsedDim, Seq("d"))))
     batches.zipWithIndex.foreach { case ((po, pc), i) =>
-      IncrementalJoinView.applyBatch(po, pc, i.toLong, path)
+      applyJoin(po, pc, i.toLong, path)
       // the bilinear delta's whole claim: the incrementally merged W is
       // exactly Agg(A ⋈ B) of the states committed alongside it — at
       // EVERY intermediate commit, not just the final one
-      val (a, b) = IncrementalJoinView.readStates(spark, path).get
-      val expect = a.join(b, "k")
-        .groupBy("seg")
-        .agg(sum(col("cents") * col("m")).as("revenue_cents"),
-          sum(col("rows") * col("m")).as("n_orders"))
-        .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
-        .orderBy("seg").collect().toSeq
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      assert(joinView(path) == expect, s"W diverged from Agg(A⋈B) at batch $i")
+      assert(joinView(path) == aggOfStates(path),
+        s"W diverged from Agg(A⋈B) at batch $i")
     }
     // the dimension updates moved revenue into MOVED, and the final view
     // is non-trivial — the A ⋈ ΔB path demonstrably ran
@@ -253,22 +269,18 @@ class IvmSpec extends SparkSpec {
   }
 
   test("join view: replaying a committed micro-batch does not change the view") {
-    import graft.streaming.IncrementalJoinView
     val path = tmpDir()
     applyJoinPhases(path)
     val before = joinView(path)
-    def ops(df: DataFrame, o: Seq[String]) =
-      df.filter(col("env.op").isin(o: _*))
     // restart semantics: the sink re-receives batchId=2 with identical
-    // content — must recompute the SAME snapshot from batch 1, not merge
-    // the deltas on top of its own earlier output
-    IncrementalJoinView.applyBatch(
-      ops(parsed, Seq("d")), ops(parsedDim, Seq("d")), 2L, path)
+    // content — the committed W is skipped and the bucket's `_applied`
+    // marker gates the merge, so nothing is added twice
+    applyJoin(parsed.filter(col("env.op") === "d"),
+      parsedDim.filter(col("env.op") === "d"), 2L, path)
     assert(joinView(path) == before)
   }
 
   test("join view: same-batch order+customer deletes are removed exactly once (cross term)") {
-    import graft.streaming.IncrementalJoinView
     import spark.implicits._
     val path = tmpDir()
     // hand-built envelopes through the real parse: one customer (seg S)
@@ -284,17 +296,30 @@ class IvmSpec extends SparkSpec {
     val cRow = """{"c_custkey":7,"c_name":"n","c_nationkey":1,"c_acctbal":"0.00","c_mktsegment":"S"}"""
     def wrap(before: String, after: String, op: String, lsn: Long) =
       s"""{"before":$before,"after":$after,"source":{"lsn":$lsn,"table":"t","ts_ms":0},"op":"$op","ts_ms":0}"""
-    IncrementalJoinView.applyBatch(
-      env(wrap("null", oRow, "c", 1L)), env(wrap("null", cRow, "c", 2L)),
+    applyJoin(env(wrap("null", oRow, "c", 1L)), env(wrap("null", cRow, "c", 2L)),
       0L, path)
     assert(joinView(path) == Seq(("S", 10000L, 1L)))
-    IncrementalJoinView.applyBatch(
-      env(wrap(oRow, "null", "d", 3L)), env(wrap(cRow, "null", "d", 4L)),
+    applyJoin(env(wrap(oRow, "null", "d", 3L)), env(wrap(cRow, "null", "d", 4L)),
       1L, path)
     // exactly once removed: the view is EMPTY, not negative
     assert(joinView(path).isEmpty)
-    val (a, b) = IncrementalJoinView.readStates(spark, path).get
+    val (a, b) = graft.streaming.BucketedJoinView.readStates(spark, path)
     assert(a.count() == 0 && b.count() == 0)
+  }
+
+  /** The production feed shape: ONE subscription carrying both tables'
+    * envelopes, split across two micro-batches. (The orders fixture's
+    * %20 replay rides in the same batch as its original OR nets a zero
+    * fact-delta either way — status flips don't move the join key — so
+    * the split cannot double-apply; feeds with cross-batch replays of
+    * measure-moving events compose the upstream stateful dedup operator
+    * first, as IncrementalView documents.) */
+  private def rawJoinFeed: Array[(String, String, String)] = {
+    import spark.implicits._
+    CdcOps.synthOrdersChangelog(spark, sfDir)
+      .unionByName(CdcOps.synthCustomerDimChangelog(spark, sfDir))
+      .select("topic", "key", "value")
+      .as[(String, String, String)].collect()
   }
 
   test("join view: streaming maintain over the raw multi-topic stream equals the one-shot apply") {
@@ -302,17 +327,7 @@ class IvmSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    // the production feed shape: ONE subscription carrying both tables'
-    // envelopes, split arbitrarily across micro-batches. (The orders
-    // fixture's %20 replay rides in the same batch as its original OR
-    // nets a zero fact-delta either way — status flips don't move the
-    // join key — so the arbitrary split cannot double-apply; feeds with
-    // cross-batch replays of measure-moving events compose the upstream
-    // stateful dedup operator first, as IncrementalView documents.)
-    val raw = CdcOps.synthOrdersChangelog(spark, sfDir)
-      .unionByName(CdcOps.synthCustomerDimChangelog(spark, sfDir))
-      .select("topic", "key", "value")
-      .as[(String, String, String)].collect()
+    val raw = rawJoinFeed
     val path = tmpDir()
     val in = MemoryStream[(String, String, String)]
     val q = IncrementalJoinView.maintain(
@@ -323,47 +338,21 @@ class IvmSpec extends SparkSpec {
       }
     } finally q.stop()
     val ref = tmpDir()
-    IncrementalJoinView.applyBatch(parsed, parsedDim, 0L, ref)
+    applyJoin(parsed, parsedDim, 0L, ref)
     assert(joinView(path).nonEmpty && joinView(path) == joinView(ref))
   }
 
-  // ---- bucketed join-view state (BucketedJoinView) ----
+  // ---- bucketed join-view state (BucketedJoinView, nBuckets > 1) ----
 
-  private def applyBucketedPhases(path: String, nBuckets: Int): Unit = {
-    import graft.streaming.{BucketedJoinView, IncrementalJoinView}
-    def ops(df: DataFrame, o: Seq[String]) =
-      df.filter(col("op").isin(o: _*))
-    val fe = IncrementalJoinView.factEvents(parsed)
-    val de = IncrementalJoinView.dimEvents(parsedDim)
-    BucketedJoinView.applyBatchEvents(
-      ops(fe, Seq("c", "r")), ops(de, Seq("c")), 0L, path, nBuckets)
-    BucketedJoinView.applyBatchEvents(
-      ops(fe, Seq("u")), ops(de, Seq("u")), 1L, path, nBuckets)
-    BucketedJoinView.applyBatchEvents(
-      ops(fe, Seq("d")), ops(de, Seq("d")), 2L, path, nBuckets)
-  }
-
-  private def bucketedView(path: String): Seq[(String, Long, Long)] =
-    graft.streaming.BucketedJoinView.readView(spark, path).get
-      .orderBy("seg").collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-
-  test("bucketed join view: equals the snapshot-store view, and W equals Agg(A ⋈ B)") {
+  test("bucketed join view: equals the 1-bucket view, and W equals Agg(A ⋈ B)") {
     val path = tmpDir()
-    applyBucketedPhases(path, nBuckets = 16)
+    applyJoinPhases(path, nBuckets = 16)
     val ref = tmpDir()
     applyJoinPhases(ref)
-    assert(bucketedView(path).nonEmpty && bucketedView(path) == joinView(ref))
-    // same layout-independence invariant as the snapshot store: the
-    // maintained W is exactly the aggregate of the committed A ⋈ B
-    val (a, b) = graft.streaming.BucketedJoinView.readStates(spark, path)
-    val expect = a.join(b, "k").groupBy("seg")
-      .agg(sum(col("cents") * col("m")).as("revenue_cents"),
-        sum(col("rows") * col("m")).as("n_orders"))
-      .filter(col("revenue_cents") =!= 0L || col("n_orders") =!= 0L)
-      .orderBy("seg").collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(bucketedView(path) == expect)
+    assert(joinView(path).nonEmpty && joinView(path) == joinView(ref))
+    // layout-independence invariant: the maintained W is exactly the
+    // aggregate of the committed A ⋈ B, whatever the bucket count
+    assert(joinView(path) == aggOfStates(path))
   }
 
   test("bucketed join view: a batch rewrites ONLY the buckets its delta keys hash into") {
@@ -371,7 +360,7 @@ class IvmSpec extends SparkSpec {
     import spark.implicits._
     val nBuckets = 16
     val path = tmpDir()
-    applyBucketedPhases(path, nBuckets)
+    applyJoinPhases(path, nBuckets)
     def listing(root: String): Map[String, Seq[(String, Long, Long)]] = {
       val d = new java.io.File(root)
       d.listFiles().filter(_.getName.startsWith("_bucket="))
@@ -418,15 +407,15 @@ class IvmSpec extends SparkSpec {
   test("bucketed join view: replaying a committed batch is a no-op (markers gate the additive merge)") {
     import graft.streaming.{BucketedJoinView, IncrementalJoinView}
     val path = tmpDir()
-    applyBucketedPhases(path, nBuckets = 16)
-    val before = bucketedView(path)
+    applyJoinPhases(path, nBuckets = 16)
+    val before = joinView(path)
     def ops(df: DataFrame, o: Seq[String]) =
       df.filter(col("op").isin(o: _*))
     BucketedJoinView.applyBatchEvents(
       ops(IncrementalJoinView.factEvents(parsed), Seq("d")),
       ops(IncrementalJoinView.dimEvents(parsedDim), Seq("d")),
       2L, path, 16)
-    assert(bucketedView(path) == before)
+    assert(joinView(path) == before)
   }
 
   test("bucketed join view: same-batch order+customer deletes cancel to an EMPTY state, and replay stays empty") {
@@ -447,20 +436,20 @@ class IvmSpec extends SparkSpec {
     BucketedJoinView.applyBatchEvents(
       fe(wrap("null", oRow, "c", 1L)), de(wrap("null", cRow, "c", 2L)),
       0L, path, 4)
-    assert(bucketedView(path) == Seq(("S", 10000L, 1L)))
+    assert(joinView(path) == Seq(("S", 10000L, 1L)))
     BucketedJoinView.applyBatchEvents(
       fe(wrap(oRow, "null", "d", 3L)), de(wrap(cRow, "null", "d", 4L)),
       1L, path, 4)
     // cross term: removed exactly once — empty, not negative; the
     // all-cancelled buckets still committed (marker present, zero rows)
-    assert(bucketedView(path).isEmpty)
+    assert(joinView(path).isEmpty)
     val (a, b) = BucketedJoinView.readStates(spark, path)
     assert(a.count() == 0 && b.count() == 0)
     // replay of the delete batch: markers say applied — still empty
     BucketedJoinView.applyBatchEvents(
       fe(wrap(oRow, "null", "d", 3L)), de(wrap(cRow, "null", "d", 4L)),
       1L, path, 4)
-    assert(bucketedView(path).isEmpty)
+    assert(joinView(path).isEmpty)
   }
 
   test("bucketed join view: crash mid-swap (bucket displaced, not republished) recovers to the clean result") {
@@ -493,7 +482,7 @@ class IvmSpec extends SparkSpec {
     // replay of batch 1 (same data, the foreachBatch contract)
     BucketedJoinView.applyBatchEvents(
       ops(fe, Seq("u")), ops(de, Seq("u")), 1L, path, nBuckets)
-    assert(bucketedView(path).nonEmpty && bucketedView(path) == bucketedView(ref))
+    assert(joinView(path).nonEmpty && joinView(path) == joinView(ref))
     assert(!new java.io.File(s"$path/A.trash-1").exists)
     assert(!new java.io.File(s"$path/A.stage-1").exists)
   }
@@ -530,7 +519,7 @@ class IvmSpec extends SparkSpec {
     // marker is still 0 → all merges re-run against pre-batch state
     BucketedJoinView.applyBatchEvents(
       ops(fe, Seq("u")), ops(de, Seq("u")), 1L, path, nBuckets)
-    assert(bucketedView(path) == bucketedView(ref))
+    assert(joinView(path) == joinView(ref))
     val (a, b) = graft.streaming.BucketedJoinView.readStates(spark, path)
     val (ra, rb) = graft.streaming.BucketedJoinView.readStates(spark, ref)
     assert(a.collect().toSet == ra.collect().toSet)
@@ -546,14 +535,14 @@ class IvmSpec extends SparkSpec {
       ops(IncrementalJoinView.factEvents(parsed), Seq("c", "r")),
       ops(IncrementalJoinView.dimEvents(parsedDim), Seq("c")),
       0L, path, 8)
-    val before = bucketedView(path)
+    val before = joinView(path)
     // crash mid-W-write: a batch=99 dir with data files but no _SUCCESS
     val crashed = new java.io.File(s"$path/W/batch=99")
     assert(crashed.mkdirs())
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$path/W/batch=99/part-00000.parquet"),
       Array[Byte](1, 2, 3))
-    assert(bucketedView(path) == before)
+    assert(joinView(path) == before)
   }
 
   test("bucketed join view: a batch with mismatched bucket geometry is rejected, not silently corrupting") {
@@ -575,21 +564,21 @@ class IvmSpec extends SparkSpec {
     // and the correct geometry still proceeds
     BucketedJoinView.applyBatchEvents(
       ops(fe, Seq("u")), ops(de, Seq("u")), 1L, path, nBuckets = 8)
-    assert(bucketedView(path).nonEmpty)
+    assert(joinView(path).nonEmpty)
   }
 
   test("bucketed join view: rebucket resharding keeps the view, states, replay gate, and continuation") {
     import graft.streaming.{BucketedJoinView, IncrementalJoinView}
     import spark.implicits._
     val src = tmpDir()
-    applyBucketedPhases(src, nBuckets = 8)
+    applyJoinPhases(src, nBuckets = 8)
     val dst = src + "-wide"
     // a crashed earlier attempt's staging leftovers are rebuilt, not trusted
     new java.io.File(dst + ".inprogress/A/_bucket=0").mkdirs()
     BucketedJoinView.rebucket(spark, src, dst, newNBuckets = 16)
     assert(!new java.io.File(dst + ".inprogress").exists())
     // view and states survive the reshard as identical row sets
-    assert(bucketedView(dst) == bucketedView(src))
+    assert(joinView(dst) == joinView(src))
     val (sa, sb) = BucketedJoinView.readStates(spark, src)
     val (da, db) = BucketedJoinView.readStates(spark, dst)
     assert(da.collect().toSet == sa.collect().toSet)
@@ -620,10 +609,10 @@ class IvmSpec extends SparkSpec {
     }
     // replay of the LAST pre-migration batch is a no-op: collapsed
     // markers gate every bucket the replayed delta probes
-    val viewBefore = bucketedView(dst)
+    val viewBefore = joinView(dst)
     BucketedJoinView.applyBatchEvents(
       ops(fe, Seq("d")), ops(de, Seq("d")), 2L, dst, nBuckets = 16)
-    assert(bucketedView(dst) == viewBefore)
+    assert(joinView(dst) == viewBefore)
     // continuation: the same NEXT batch applied to both geometries gives
     // the same view
     def env(json: String) = graft.sources.Debezium.parseEnvelope(
@@ -638,13 +627,13 @@ class IvmSpec extends SparkSpec {
       graft.sources.Debezium.customerRowSchema))
     BucketedJoinView.applyBatchEvents(fe3, de3, 3L, src, nBuckets = 8)
     BucketedJoinView.applyBatchEvents(fe3, de3, 3L, dst, nBuckets = 16)
-    assert(bucketedView(dst) == bucketedView(src))
+    assert(joinView(dst) == joinView(src))
   }
 
   test("rebucket refuses an unhealed store and an inconsistent one") {
     import graft.streaming.BucketedJoinView
     val src = tmpDir()
-    applyBucketedPhases(src, nBuckets = 8)
+    applyJoinPhases(src, nBuckets = 8)
     // crash residue next to a side: heal by resuming the stream, not here
     assert(new java.io.File(s"$src/A.stage-99").mkdirs())
     val e1 = intercept[IllegalArgumentException](
@@ -668,14 +657,11 @@ class IvmSpec extends SparkSpec {
   }
 
   test("bucketed join view: streaming maintain over the raw multi-topic stream equals the one-shot apply") {
-    import graft.streaming.{BucketedJoinView, IncrementalJoinView}
+    import graft.streaming.BucketedJoinView
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val raw = CdcOps.synthOrdersChangelog(spark, sfDir)
-      .unionByName(CdcOps.synthCustomerDimChangelog(spark, sfDir))
-      .select("topic", "key", "value")
-      .as[(String, String, String)].collect()
+    val raw = rawJoinFeed
     val path = tmpDir()
     val in = MemoryStream[(String, String, String)]
     val q = BucketedJoinView.maintain(
@@ -687,8 +673,8 @@ class IvmSpec extends SparkSpec {
       }
     } finally q.stop()
     val ref = tmpDir()
-    IncrementalJoinView.applyBatch(parsed, parsedDim, 0L, ref)
-    assert(bucketedView(path).nonEmpty && bucketedView(path) == joinView(ref))
+    applyJoin(parsed, parsedDim, 0L, ref)
+    assert(joinView(path).nonEmpty && joinView(path) == joinView(ref))
   }
 
   test("join view stores agree with each other AND a driver-side fold on random two-table change logs") {
@@ -713,9 +699,12 @@ class IvmSpec extends SparkSpec {
     // every event lands in an ARBITRARY one of 3 batches (deletes can
     // precede their insert across batches — the additive algebra must
     // commute); orders reference customer keys 0..nCust-1, some of which
-    // are never inserted (dangling facts must simply not join)
+    // are never inserted (dangling facts must simply not join). With
+    // `snapshot`, the orders' inserts are instead a Debezium snapshot:
+    // op=r, all at ONE shared source position, all in batch 0 — only the
+    // row key tells them apart, so replay dedup must key on it
     type Ev = (String, Long, String, Int) // (json, lsn, side, batch)
-    val gen: Gen[Seq[Ev]] = for {
+    def gen(snapshot: Boolean): Gen[Seq[Ev]] = for {
       nCust <- Gen.choose(1, 4)
       nOrd <- Gen.choose(1, 8)
       custHists <- Gen.sequence[Seq[Seq[Ev]], Seq[Ev]]((0 until nCust).map { c =>
@@ -744,7 +733,9 @@ class IvmSpec extends SparkSpec {
           bs <- Gen.listOfN(nUpd + 2, Gen.choose(0, 2))
         } yield {
           val base = k * 100L
-          val ins = (oEnv(k, cust, base, "c", None, Some(ps.head)), base, "O", bs.head)
+          val ins =
+            if (snapshot) (oEnv(k, cust, 0L, "r", None, Some(ps.head)), 0L, "O", 0)
+            else (oEnv(k, cust, base, "c", None, Some(ps.head)), base, "O", bs.head)
           val upds = (1 to nUpd).map(i => (oEnv(k, cust, base + i, "u",
             Some(ps(i - 1)), Some(ps(i))), base + i, "O", bs(i)))
           val dels = if (del) Seq((oEnv(k, cust, base + 50, "d", Some(ps.last), None),
@@ -753,8 +744,11 @@ class IvmSpec extends SparkSpec {
         }
       })
     } yield custHists.flatten ++ ordHists.flatten
-    (1 to 5).foreach { i =>
-      val events = gen.apply(Gen.Parameters.default, Seed(0xB17L + i))
+    // odd seeds bootstrap the orders from a snapshot, even seeds from
+    // their insert history
+    (1 to 6).foreach { i =>
+      val snapshot = i % 2 == 1
+      val events = gen(snapshot).apply(Gen.Parameters.default, Seed(0xB17L + i))
         .getOrElse(fail(s"generator produced nothing for seed $i"))
       // driver-side ground truth: surviving last order versions joined to
       // surviving last customer versions, aggregated by segment
@@ -788,7 +782,7 @@ class IvmSpec extends SparkSpec {
         .flatMap { case (c, p) => custs.get(c).map(s => (s, p * 100L)) }
         .groupBy(_._1).map { case (s, xs) =>
           (s, xs.map(_._2).sum, xs.size.toLong) }.toSet
-      val snap = tmpDir(); val bkt = tmpDir()
+      val one = tmpDir(); val bkt = tmpDir()
       val batches = scala.collection.mutable.ArrayBuffer
         .empty[(DataFrame, DataFrame)]
       (0 to 2).foreach { b =>
@@ -802,25 +796,24 @@ class IvmSpec extends SparkSpec {
         }
         val fe = IncrementalJoinView.factEvents(df("O"))
         val de = IncrementalJoinView.dimEvents(df("C"))
-        IncrementalJoinView.applyBatchEvents(fe, de, b.toLong, snap)
+        BucketedJoinView.applyBatchEvents(fe, de, b.toLong, one, 1)
         BucketedJoinView.applyBatchEvents(fe, de, b.toLong, bkt, 4)
         batches += ((fe, de))
       }
       val lastBatch = batches.last
-      val vSnap = joinView(snap).toSet
-      val vBkt = bucketedView(bkt).toSet
-      withClue(s"seed=${0xB17L + i}: ") {
-        assert(vSnap.map(t => (t._1, t._2, t._3)) == expected)
-        assert(vBkt == vSnap)
+      val vOne = joinView(one).toSet
+      val vBkt = joinView(bkt).toSet
+      withClue(s"seed=${0xB17L + i} snapshot=$snapshot: ") {
+        assert(vOne == expected)
+        assert(vBkt == vOne)
         // replay safety on random data: re-delivering the committed last
-        // batch changes NEITHER store (the snapshot store recomputes from
-        // its predecessor; the bucketed store's markers gate the merge)
-        IncrementalJoinView.applyBatchEvents(
-          lastBatch._1, lastBatch._2, 2L, snap)
+        // batch changes NEITHER store (the markers gate the merge)
+        BucketedJoinView.applyBatchEvents(
+          lastBatch._1, lastBatch._2, 2L, one, 1)
         BucketedJoinView.applyBatchEvents(
           lastBatch._1, lastBatch._2, 2L, bkt, 4)
-        assert(joinView(snap).toSet == vSnap)
-        assert(bucketedView(bkt).toSet == vBkt)
+        assert(joinView(one).toSet == vOne)
+        assert(joinView(bkt).toSet == vBkt)
         // mid-stream reshard equivalence: the same changelog with an
         // OFFLINE rebucket (4 → 7) between batches 1 and 2 must land on
         // the identical view, and the collapsed markers must still gate
@@ -834,11 +827,11 @@ class IvmSpec extends SparkSpec {
         BucketedJoinView.rebucket(spark, mig, mig2, 7)
         BucketedJoinView.applyBatchEvents(
           batches(2)._1, batches(2)._2, 2L, mig2, 7)
-        assert(bucketedView(mig2).toSet == vSnap,
+        assert(joinView(mig2).toSet == vOne,
           "mid-stream reshard diverged from the never-resharded stores")
         BucketedJoinView.applyBatchEvents(
           batches(2)._1, batches(2)._2, 2L, mig2, 7)
-        assert(bucketedView(mig2).toSet == vSnap,
+        assert(joinView(mig2).toSet == vOne,
           "replay after a reshard re-applied a committed batch")
       }
     }

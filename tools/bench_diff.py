@@ -25,6 +25,9 @@ heads as large improvements — expected, and never flagged.
   - NEW / REMOVED queries (surface changes, informational);
   - the total-time ratio.
 
+Two runs at different core counts (`cpus`) do not compare: the script
+refuses them with exit code 2 before any diff.
+
 Exit code 1 iff any query regressed past the flag on a comparable host
 (probe-noise ratio <= 1.3); otherwise 0. Host comparability uses the min
 "noise" probe of each run — if the current host was >1.3x noisier than the
@@ -57,6 +60,11 @@ def main():
     flag = float(opts.get("flag") or 1.5)
     floor = float(opts.get("floor") or 0.15)
     prior, cur = load(args[0]), load(args[1])
+    if prior.get("cpus") != cur.get("cpus"):
+        print(f"bench_diff: {args[0]} ran at cpus={prior.get('cpus')} but "
+              f"{args[1]} at cpus={cur.get('cpus')}; per-query minima at "
+              "different core counts do not compare", file=sys.stderr)
+        sys.exit(2)
     pq = {k: v for k, v in prior["queries"].items() if v is not None}
     cq = {k: v for k, v in cur["queries"].items() if v is not None}
 
